@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   *
@@ -29,21 +27,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // dev-only (scale probes): fewer timed passes; the driver never sets it
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(TimedPasses)
-    // the driver contract is local[32]; the env override exists for dev runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // rank-limit windows (heads, pages, queue probes) must rewrite to
-      // map-side WindowGroupLimits; the default threshold (1000) is below
-      // the 8192 queue-probe scan cap (QueueLag.PageSize*PageLimit)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "16384")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cores)
     // dev-only: SPARK_GRAFT_ONLY=dd2,or1 restricts the suite for iteration,
     // SPARK_GRAFT_SKIP excludes gates (scale probes drop the by-contract
     // quadratics); the driver never sets either, so the official run is

@@ -49,25 +49,33 @@ object Tables {
   private[graft] def fanOut(spark: SparkSession, path: String,
       df: DataFrame, key: String): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
-    // Sum REGULAR file sizes (recursively): a directory-layout parquet
-    // table (standard Spark write output) must measure its data files, not
-    // the directory inode (~4 KB), or every large table would classify as
-    // "unsplittable-small" and eat a cluster-wide repartition — the exact
-    // opposite of the documented identity-at-scale guarantee (r14 ADVICE
-    // fix). Unknown/missing paths default to "large" (no fan-out), and only
-    // non-fatal errors are swallowed.
-    val bytes =
-      try {
-        val p = java.nio.file.Paths.get(path)
-        if (java.nio.file.Files.isDirectory(p)) {
-          val s = java.nio.file.Files.walk(p)
-          try s.filter(java.nio.file.Files.isRegularFile(_))
-            .mapToLong(java.nio.file.Files.size(_)).sum()
-          finally s.close()
-        } else java.nio.file.Files.size(p)
-      } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-    if (bytes < par * FanOutBytesPerCore) df.repartition(par, col(key))
+    if (dataBytes(path) < par * FanOutBytesPerCore) df.repartition(par, col(key))
     else df
+  }
+
+  /** Bytes of the data files of a table: the file itself, or for a
+    * directory-layout table (standard Spark write output) its regular files
+    * recursively, skipping hidden names as Spark's reader does — `_SUCCESS`,
+    * `.crc` checksums, `_temporary` dirs of aborted writes. A directory
+    * measured by its inode (~4 KB) would classify every large table as
+    * "unsplittable-small" and fan it out. Unknown/missing paths count as
+    * large (no fan-out); only non-fatal errors are swallowed. */
+  private[graft] def dataBytes(path: String): Long = {
+    import scala.jdk.CollectionConverters._
+    try {
+      val root = java.nio.file.Paths.get(path)
+      if (java.nio.file.Files.isDirectory(root)) {
+        def hidden(p: java.nio.file.Path) = {
+          val n = p.getFileName.toString
+          n.startsWith("_") || n.startsWith(".")
+        }
+        val s = java.nio.file.Files.walk(root)
+        try s.filter(p => java.nio.file.Files.isRegularFile(p) &&
+            !root.relativize(p).iterator().asScala.exists(hidden))
+          .mapToLong(java.nio.file.Files.size(_)).sum()
+        finally s.close()
+      } else java.nio.file.Files.size(root)
+    } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
   }
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame =

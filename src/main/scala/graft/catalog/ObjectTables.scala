@@ -28,16 +28,15 @@ object ObjectTables {
       .map(b => f"$b%02x").mkString
   }
 
-  /** `md5(CAST(residue AS STRING))` for a residue provably in 0..99,
-    * as a constant-array lookup (codegen: one array access per row).
-    * `pmod` guards the index (r14 ADVICE fix): Spark's `%` preserves sign
-    * and `element_at` reads NEGATIVE indices from the array END, so a
-    * residue derived from a negative-capable column would silently return
-    * a wrong (but real-looking) digest instead of failing; pmod keeps any
-    * x%100 input in 0..99 with the identical value on the existing
-    * non-negative callers. */
+  /** `md5(CAST(residue AS STRING))` for a residue in 0..99, as a
+    * constant-array lookup (codegen: one array access per row). A residue
+    * outside 0..99 raises instead of reading a wrong but real-looking
+    * digest (`element_at` reads negative indices from the array end);
+    * a null residue gives null, as `md5` does. */
   private[graft] def md5Mod100(residue: Column): Column =
-    element_at(typedLit(Md5Mod100), pmod(residue.cast("int"), lit(100)) + 1)
+    when(residue < 0 || residue > 99, raise_error(concat(
+        lit("md5Mod100: residue out of 0..99: "), residue.cast("string"))))
+      .otherwise(element_at(typedLit(Md5Mod100), residue.cast("int") + 1))
 
   /** objects(bucket, key, version_ord, version_ulid, is_delete_marker,
     * hash, size, created_at_ms) — one version per lineitem row. */

@@ -629,6 +629,65 @@ object Dedup {
       .select(col("a"), col("b"), col("inter"), col("cont_a_bp"), col("cont_b_bp"))
   }
 
+  /** Round cap for [[dedupComponents]]: label propagation converges in
+    * diameter rounds, and a >256-hop transitive chain of near-dups is a
+    * data bug, not a cluster shape. NEVER silently truncated — hitting the
+    * cap throws, because a non-converged label set splits one cluster
+    * across multiple canonicals and a dedup pipeline would quietly keep
+    * duplicate survivors. */
+  val ComponentMaxRounds = 256
+
+  /** Driver-local connected components of a pair list: union–find with
+    * path halving, canonical = component minimum under the SAME ordering
+    * Spark's `min()` uses (UTF8String binary order for strings — not
+    * Java's UTF-16 order). None when the pairs do not fit
+    * [[graft.graph.LocalGraph]]; the output is one row per node. */
+  private def localComponents(pairs: DataFrame): Option[DataFrame] = {
+    import graft.graph.LocalGraph
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+    val dt = pairs.schema("x").dataType
+    // the cap counts edges, and a pair is an edge each way
+    for {
+      keys <- LocalGraph.interner(dt)
+      rows <- LocalGraph.collect(pairs, LocalGraph.MaxEdges / 2)
+      (xs, ys) <- keys.edges(rows)
+    } yield {
+      val n = keys.size
+      val parent = Array.tabulate(n)(identity)
+      def find(a0: Int): Int = {
+        var a = a0
+        while (parent(a) != a) { parent(a) = parent(parent(a)); a = parent(a) }
+        a
+      }
+      var i = 0
+      while (i < xs.length) {
+        val ra = find(xs(i)); val rb = find(ys(i))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        i += 1
+      }
+      // component minimum under Spark's min() ordering (binary UTF-8 for strings)
+      val lt: (Any, Any) => Boolean = dt match {
+        case LongType => (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long]
+        case IntegerType => (a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int]
+        case StringType => (a, b) =>
+          org.apache.spark.unsafe.types.UTF8String.fromString(a.asInstanceOf[String])
+            .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(
+              b.asInstanceOf[String])) < 0
+      }
+      val minOf = new Array[Any](n)
+      i = 0
+      while (i < n) {
+        val r = find(i)
+        if (minOf(r) == null || lt(keys.key(i), minOf(r))) minOf(r) = keys.key(i)
+        i += 1
+      }
+      LocalGraph.frame(pairs.sparkSession,
+        (0 until n).map(i => org.apache.spark.sql.Row(keys.key(i), minOf(find(i)))),
+        StructType(Seq(StructField("doc_id", dt, nullable = false),
+          StructField("canonical_id", dt, nullable = false))))
+    }
+  }
+
   /** Transitive near-duplicate clustering: connected components over an
     * undirected similarity-pair set, by iterative min-label propagation
     * (label = smallest doc_id reachable). Each round is one shuffle join of
@@ -639,95 +698,8 @@ object Dedup {
     * where a general graph would want large-star/small-star. Returns
     * (doc_id, canonical_id) for every document in at least one pair; the
     * canonical is the cluster's smallest doc_id (the survivor a dedup
-    * pipeline keeps). */
-  /** Round cap for [[dedupComponents]]: label propagation converges in
-    * diameter rounds, and a >256-hop transitive chain of near-dups is a
-    * data bug, not a cluster shape. NEVER silently truncated — hitting the
-    * cap throws, because a non-converged label set splits one cluster
-    * across multiple canonicals and a dedup pipeline would quietly keep
-    * duplicate survivors. */
-  val ComponentMaxRounds = 256
-
-  /** Edge sets at or below this row count run connected components as a
-    * driver-local union–find instead of the distributed fixpoint — the
-    * [[graft.sparql.PathCompiler.LocalClosureMaxEdges]] device: a
-    * d-diameter cluster graph costs ~d·4 Spark jobs of pure scheduling
-    * overhead distributed, versus milliseconds of union–find on ≤ a few
-    * hundred MB of collected keys. Unlike the path closure the OUTPUT here
-    * is bounded by the input (one row per node ≤ 2·edges), so the input cap
-    * alone is safe. Larger sets (and non-long/string/int keys, and any null
-    * endpoint) keep the distributed min-label loop. */
-  val LocalComponentsMaxEdges = 2000000L
-
-  /** Driver-local connected components of a symmetric edge list: union–find
-    * with path halving, canonical = component minimum under the SAME
-    * ordering Spark's `min()` uses (UTF8String binary order for strings —
-    * not Java's UTF-16 order). Returns None when a key type or a null
-    * endpoint needs the distributed fixpoint. */
-  private def localComponents(edges: DataFrame): Option[DataFrame] = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
-    val spark = edges.sparkSession
-    val dt = edges.schema("x").dataType
-    if (dt != LongType && dt != StringType && dt != IntegerType) return None
-    val rows = edges.collect()
-    val ids = new java.util.HashMap[Any, Integer]()
-    val vals = new scala.collection.mutable.ArrayBuffer[Any]()
-    val xs = new Array[Int](rows.length)
-    val ys = new Array[Int](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      val r = rows(i)
-      if (r.isNullAt(0) || r.isNullAt(1)) return None
-      def intern(v: Any): Int = {
-        val got = ids.get(v)
-        if (got != null) got.intValue()
-        else { val id = vals.length; ids.put(v, id); vals += v; id }
-      }
-      xs(i) = intern(r.get(0))
-      ys(i) = intern(r.get(1))
-      i += 1
-    }
-    val n = vals.length
-    val parent = Array.tabulate(n)(identity)
-    def find(a0: Int): Int = {
-      var a = a0
-      while (parent(a) != a) { parent(a) = parent(parent(a)); a = parent(a) }
-      a
-    }
-    i = 0
-    while (i < rows.length) {
-      val ra = find(xs(i)); val rb = find(ys(i))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      i += 1
-    }
-    // component minimum under Spark's min() ordering (binary UTF-8 for strings)
-    val lt: (Any, Any) => Boolean = dt match {
-      case LongType => (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long]
-      case IntegerType => (a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int]
-      case StringType => (a, b) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(a.asInstanceOf[String])
-          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(
-            b.asInstanceOf[String])) < 0
-    }
-    val minOf = new Array[Any](n)
-    i = 0
-    while (i < n) {
-      val r = find(i)
-      if (minOf(r) == null || lt(vals(i), minOf(r))) minOf(r) = vals(i)
-      i += 1
-    }
-    val out = new Array[org.apache.spark.sql.Row](n)
-    i = 0
-    while (i < n) {
-      out(i) = org.apache.spark.sql.Row(vals(i), minOf(find(i)))
-      i += 1
-    }
-    val schema = StructType(Seq(StructField("doc_id", dt, nullable = false),
-      StructField("canonical_id", dt, nullable = false)))
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toIndexedSeq), schema))
-  }
-
+    * pipeline keeps). Small pair sets run as a driver-local union–find
+    * ([[graft.graph.LocalGraph]]). */
   def dedupComponents(pairs: DataFrame): DataFrame = {
     // barrier the RAW pairs, not the symmetrized edge list: union–find is
     // direction-blind, so the driver-local fast path consumes (a, b)
@@ -738,14 +710,9 @@ object Dedup {
     val (pairBar, pairRdd) = graft.Caches.barrier(
       pairs.select(col("a").as("x"), col("b").as("y")))
     graft.Caches.track(pairRdd)
-    // the count below materializes the barrier either way (the fixpoint's
-    // round-1 join would otherwise do it); small graphs then skip the
-    // whole distributed loop. The cap stays an EDGE count (2 edges/pair).
-    if (2 * pairBar.count() <= LocalComponentsMaxEdges) {
-      localComponents(pairBar) match {
-        case Some(local) => return local
-        case None => // unsupported shape — run the distributed fixpoint
-      }
+    localComponents(pairBar) match {
+      case Some(local) => return local
+      case None => // too big or an unsupported key — the distributed fixpoint
     }
     val edges = pairBar.select(explode(array(
         struct(col("x"), col("y")),

@@ -1,8 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, IntegerType, LongType,
+  StructField, StructType}
 
 /** Iterative graph measures over an edge list — the link-analysis side of a
   * corpus pipeline (domain authority for crawl prioritization, citation
@@ -93,6 +94,30 @@ object Graphs {
       .agg(count(lit(1)).as("n_triangles"))
   }
 
+  private case class Small(keys: LocalGraph.Interner, rows: Array[Row],
+      src: Array[Int], dst: Array[Int], seeds: Array[Int])
+
+  /** The edge rows (src, dst, …) on the driver with interned endpoints,
+    * and the interned seeds — a seed outside the edges' nodes gets an id of
+    * its own and still seeds. None when the edges or seeds pass
+    * [[LocalGraph.MaxEdges]], or a key type or null endpoint needs the
+    * dataflow rounds. */
+  private def small(edges: DataFrame, seeds: DataFrame): Option[Small] =
+    for {
+      keys <- LocalGraph.interner(edges.schema("src").dataType)
+      if seeds.schema("node").dataType == edges.schema("src").dataType
+      rows <- LocalGraph.collect(edges, LocalGraph.MaxEdges)
+      seedRows <- LocalGraph.collect(seeds.select(col("node")), LocalGraph.MaxEdges)
+      (xs, ys) <- keys.edges(rows)
+      ss <- keys.nodes(seedRows)
+    } yield Small(keys, rows, xs, ys, ss)
+
+  /** The (node, d) frame of driver-side result rows, both columns non-null. */
+  private def result(edges: DataFrame, rows: Seq[Row], dType: DataType): DataFrame =
+    LocalGraph.frame(edges.sparkSession, rows, StructType(Seq(
+      StructField("node", edges.schema("src").dataType, nullable = false),
+      StructField("d", dType, nullable = false))))
+
   /** Multi-source BFS hop distance, the reachability/proximity primitive
     * (crawl-frontier distance from seed domains, citation distance from a
     * trusted core). Returns (node, d) for every node within `maxDepth`
@@ -106,118 +131,33 @@ object Graphs {
     * every round: cache per round, release via the entry-point registry; at
     * real scale `localCheckpoint` every few rounds cuts the growing
     * anti-join lineage, and edges live bucketed by `src` so every round's
-    * join is shuffle-free on the edge side (same note as [[pageRank]]). */
-  /** Edge sets at or below this row count run [[bfsHops]]/[[shortestPaths]]
-    * on the driver (interned-index BFS / Bellman–Ford) instead of the
-    * d-round dataflow — the [[graft.dedup.Dedup.LocalComponentsMaxEdges]] /
-    * PathCompiler.localClosure device: each distributed round costs 2-4
-    * Spark jobs of pure scheduling overhead, versus microseconds of array
-    * walking. Output is bounded by the node count ≤ 2·edges. Larger sets
-    * (and non-long/int/string keys or null endpoints) keep the dataflow
-    * rounds, which is the shape that scales to 100 TB. */
-  val LocalGraphMaxEdges = 2000000L
-
-  /** Collected (src, dst[, w]) edge array + interned node ids, or None when
-    * a type/null needs the distributed path. */
-  private def collectEdges(edges: DataFrame, seeds: DataFrame,
-      withW: Boolean): Option[(Array[Int], Array[Int], Array[Long],
-      Array[Int], scala.collection.mutable.ArrayBuffer[Any],
-      java.util.HashMap[Any, Integer])] = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    val dt = edges.schema("src").dataType
-    if (dt != LongType && dt != StringType && dt != IntegerType) return None
-    if (seeds.schema("node").dataType != dt) return None
-    // two-stage probe (r14): first a column-pruned limit(cap+1).count() —
-    // LocalLimit short-circuits every scan task at cap+1 rows and only a
-    // count crosses to the driver, so deciding "too big — use the dataflow"
-    // never ships the ~2M-row edge prefix to the driver (the r13 form
-    // collected it at any scale just to discard it). Only when the graph is
-    // actually small does the second pass collect the rows the local
-    // algorithm needs; the ≤2M-row double computation that costs is bench-
-    // scale cheap, while the fallback probe is now bounded executor work.
-    if (edges.limit(LocalGraphMaxEdges.toInt + 1).count() > LocalGraphMaxEdges)
-      return None
-    val eRows = edges.collect()
-    val sRows = seeds.collect()
-    val ids = new java.util.HashMap[Any, Integer]()
-    val vals = new scala.collection.mutable.ArrayBuffer[Any]()
-    def intern(v: Any): Int = {
-      val got = ids.get(v)
-      if (got != null) got.intValue()
-      else { val id = vals.length; ids.put(v, id); vals += v; id }
-    }
-    val xs = new Array[Int](eRows.length)
-    val ys = new Array[Int](eRows.length)
-    val ws = if (withW) new Array[Long](eRows.length) else null
-    var i = 0
-    while (i < eRows.length) {
-      val r = eRows(i)
-      if (r.isNullAt(0) || r.isNullAt(1) || (withW && r.isNullAt(2))) return None
-      xs(i) = intern(r.get(0))
-      ys(i) = intern(r.get(1))
-      if (withW) ws(i) = r.get(2) match {
-        case l: java.lang.Long => l.longValue()
-        case n: java.lang.Integer => n.longValue()
-        case _ => return None
-      }
-      i += 1
-    }
-    // seeds outside the edge node domain still seed (they emit d=0 rows)
-    val ss = new Array[Int](sRows.length)
-    i = 0
-    while (i < sRows.length) {
-      if (sRows(i).isNullAt(0)) return None
-      ss(i) = intern(sRows(i).get(0))
-      i += 1
-    }
-    Some((xs, ys, ws, ss, vals, ids))
-  }
-
-  private def localResult(spark: org.apache.spark.sql.SparkSession,
-      rows: IndexedSeq[org.apache.spark.sql.Row],
-      nodeType: org.apache.spark.sql.types.DataType,
-      dType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types.{StructField, StructType}
-    spark.createDataFrame(spark.sparkContext.parallelize(rows),
-      StructType(Seq(StructField("node", nodeType, nullable = false),
-        StructField("d", dType, nullable = false))))
-  }
-
+    * join is shuffle-free on the edge side (same note as [[pageRank]]).
+    * Small graphs run the same rounds on the driver ([[LocalGraph]]). */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
-    locally {
-      collectEdges(edges, seeds, withW = false) match {
-        case Some((xs, ys, _, ss, vals, _)) =>
-          // interned adjacency BFS — same rounds as the dataflow form
-          val n = vals.length
-          val heads = Array.fill(n)(-1)
-          val nexts = new Array[Int](xs.length)
-          var i = 0
-          while (i < xs.length) { nexts(i) = heads(xs(i)); heads(xs(i)) = i; i += 1 }
-          val dist = Array.fill(n)(-1)
-          var frontier = ss.distinct.toArray
-          frontier.foreach(s => dist(s) = 0)
-          var depth = 0
-          while (depth < maxDepth && frontier.nonEmpty) {
-            depth += 1
-            val next = scala.collection.mutable.ArrayBuffer[Int]()
-            frontier.foreach { u =>
-              var e = heads(u)
-              while (e >= 0) {
-                val v = ys(e)
-                if (dist(v) < 0) { dist(v) = depth; next += v }
-                e = nexts(e)
-              }
+    small(edges.select(col("src"), col("dst")), seeds) match {
+      case Some(g) =>
+        val (first, next) = LocalGraph.adjacency(g.keys.size, g.src)
+        val dist = Array.fill(g.keys.size)(-1)
+        var frontier = g.seeds.distinct
+        frontier.foreach(s => dist(s) = 0)
+        var depth = 0
+        while (depth < maxDepth && frontier.nonEmpty) {
+          depth += 1
+          val found = scala.collection.mutable.ArrayBuffer[Int]()
+          frontier.foreach { u =>
+            var e = first(u)
+            while (e >= 0) {
+              val v = g.dst(e)
+              if (dist(v) < 0) { dist(v) = depth; found += v }
+              e = next(e)
             }
-            frontier = next.toArray
           }
-          val out = (0 until n).iterator.filter(dist(_) >= 0)
-            .map(i => org.apache.spark.sql.Row(vals(i), dist(i))).toIndexedSeq
-          return localResult(edges.sparkSession, out,
-            edges.schema("src").dataType,
-            org.apache.spark.sql.types.IntegerType)
-        case None => // unsupported shape — dataflow rounds below
-      }
+          frontier = found.toArray
+        }
+        return result(edges, (0 until g.keys.size).filter(dist(_) >= 0)
+          .map(i => Row(g.keys.key(i), dist(i))), IntegerType)
+      case None => // dataflow rounds below
     }
     var visited = seeds.select(col("node")).distinct()
       .withColumn("d", lit(0)).cache()
@@ -249,40 +189,40 @@ object Graphs {
   def shortestPaths(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    locally {
-      collectEdges(edges.select(col("src"), col("dst"), col("w")), seeds,
-          withW = true) match {
-        case Some((xs, ys, ws, ss, vals, _)) =>
-          // Bellman–Ford with the SAME snapshot-per-round relaxation as the
-          // dataflow form (relax reads the previous round's dist only), so
-          // d(v) after k rounds = min weight over ≤ k-edge paths — identical
-          // rows, including negative weights under the hop bound
-          val n = vals.length
-          val NoDist = Long.MinValue
-          var dist = Array.fill(n)(NoDist)
-          ss.foreach(s => dist(s) = 0L)
-          var r = 0
-          while (r < rounds) {
-            val next = dist.clone()
-            var e = 0
-            while (e < xs.length) {
-              val ds = dist(xs(e))
-              if (ds != NoDist) {
-                val cand = ds + ws(e)
-                if (next(ys(e)) == NoDist || cand < next(ys(e))) next(ys(e)) = cand
-              }
-              e += 1
+    val weighted = edges.schema("w").dataType match {
+      case LongType | IntegerType => small(
+        edges.select(col("src"), col("dst"), col("w")), seeds)
+      case _ => None
+    }
+    weighted.filter(g => !g.rows.exists(_.isNullAt(2))) match {
+      case Some(g) =>
+        // Bellman–Ford with the SAME snapshot-per-round relaxation as the
+        // dataflow form (relax reads the previous round's dist only), so
+        // d(v) after k rounds = min weight over ≤ k-edge paths — identical
+        // rows, including negative weights under the hop bound
+        val ws = g.rows.map(_.getAs[Number](2).longValue)
+        val NoDist = Long.MinValue
+        var dist = Array.fill(g.keys.size)(NoDist)
+        g.seeds.foreach(s => dist(s) = 0L)
+        var r = 0
+        while (r < rounds) {
+          val relaxed = dist.clone()
+          var e = 0
+          while (e < ws.length) {
+            val ds = dist(g.src(e))
+            if (ds != NoDist) {
+              val cand = ds + ws(e)
+              val v = g.dst(e)
+              if (relaxed(v) == NoDist || cand < relaxed(v)) relaxed(v) = cand
             }
-            dist = next
-            r += 1
+            e += 1
           }
-          val out = (0 until n).iterator.filter(dist(_) != NoDist)
-            .map(i => org.apache.spark.sql.Row(vals(i), dist(i))).toIndexedSeq
-          return localResult(edges.sparkSession, out,
-            edges.schema("src").dataType,
-            org.apache.spark.sql.types.LongType)
-        case None => // unsupported shape — dataflow rounds below
-      }
+          dist = relaxed
+          r += 1
+        }
+        return result(edges, (0 until g.keys.size).filter(dist(_) != NoDist)
+          .map(i => Row(g.keys.key(i), dist(i))), LongType)
+      case None => // dataflow rounds below
     }
     var dist = seeds.select(col("node")).distinct()
       .withColumn("d", lit(0L)).cache()

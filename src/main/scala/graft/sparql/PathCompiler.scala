@@ -1,7 +1,9 @@
 package graft.sparql
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.graph.LocalGraph
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Property-path evaluation (`GraphPattern::Path`, reference handle.rs:4893).
   *
@@ -113,20 +115,13 @@ object PathCompiler {
   private def barrier(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_]) =
     graft.Caches.barrier(df)
 
-  /** transitive closure fixpoint. Doubling phase: after k rounds `acc` holds
-    * every path of length ≤ 2^k — ⌈log₂ d⌉ rounds for diameter d, ideal for
-    * small/medium pair sets where per-job overhead dominates. Past
-    * [[DoublingMaxPairs]] the acc⋈acc intermediate (Σ indeg·outdeg over
-    * midpoints) can dwarf the closure itself, so large sets extend one hop
-    * per round (frontier⋈base, shuffling only novel pairs). */
-  /** Edge sets at or below this size TRY to close on the driver: a 20-edge
-    * ring costs ⌈log₂ d⌉ distributed rounds (≈15 Spark jobs of pure
-    * overhead) versus microseconds of in-memory BFS. 100k edges is a few MB
-    * of strings on the driver — safe to collect — but the input cap alone
-    * does not bound the output (all-pairs of a dense chain is |E|²/2
-    * pairs), so [[LocalClosureMaxPairs]] bounds the OUTPUT as
-    * it accumulates — past it the BFS aborts and the distributed fixpoint
-    * takes over. Driver memory stays ≤ ~500k pairs either way. */
+  /** Edge sets at or below this size close on the driver
+    * ([[graft.graph.LocalGraph]]): a 20-edge ring costs ⌈log₂ d⌉
+    * distributed rounds (≈15 Spark jobs) against microseconds of BFS. The
+    * closure's output is not bounded by its input (all-pairs of a dense
+    * chain is |E|²/2 pairs), so it gets a smaller input cap than the other
+    * local graph algorithms and [[LocalClosureMaxPairs]] bounds the output
+    * as it accumulates — past it the distributed fixpoint takes over. */
   val LocalClosureMaxEdges = 100000L
 
   /** Hard output bound for the driver-local BFS (pairs, not edges). */
@@ -137,57 +132,67 @@ object PathCompiler {
     * memory; larger frontiers fall back to the shuffle join). */
   val BfsBroadcastMaxRows = 1000000L
 
-  /** all-pairs ≥1-step reachability of a small edge list, computed with an
-    * interned-index BFS on the driver; None when the output outgrows
-    * [[LocalClosureMaxPairs]] (caller falls back to the distributed path). */
-  private def localClosure(spark: org.apache.spark.sql.SparkSession,
-      edges: Array[(String, String)]): Option[DataFrame] = {
-    import spark.implicits._
-    val ids = scala.collection.mutable.HashMap[String, Int]()
-    def id(s: String): Int = ids.getOrElseUpdate(s, ids.size)
-    val adj = scala.collection.mutable.HashMap[Int, scala.collection.mutable.ArrayBuffer[Int]]()
-    edges.foreach { case (s, o) =>
-      adj.getOrElseUpdate(id(s), scala.collection.mutable.ArrayBuffer()) += id(o)
+  /** All-pairs ≥1-step reachability of the collected (s, o) `rows` of
+    * `base`, by a BFS from every node on the driver; None on a null
+    * endpoint or when the output outgrows [[LocalClosureMaxPairs]] (the
+    * caller falls back to the distributed path). */
+  private def localClosure(base: DataFrame, rows: Array[Row]): Option[DataFrame] = {
+    val dt = base.schema("s").dataType
+    val (keys, xs, ys) = (for {
+      keys <- LocalGraph.interner(dt)
+      (xs, ys) <- keys.edges(rows)
+    } yield (keys, xs, ys)) match {
+      case Some(g) => g
+      case None => return None
     }
-    val names = ids.toArray.sortBy(_._2).map(_._1)
-    val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    for (src <- adj.keys) {
-      val seen = new java.util.BitSet(ids.size)
-      var frontier = adj(src)
-      while (frontier.nonEmpty) {
-        if (out.size > LocalClosureMaxPairs) return None
-        val next = scala.collection.mutable.ArrayBuffer[Int]()
-        frontier.foreach { n =>
-          if (!seen.get(n)) {
-            seen.set(n)
-            out += ((names(src), names(n)))
-            adj.get(n).foreach(next ++= _)
-          }
+    val n = keys.size
+    val (first, next) = LocalGraph.adjacency(n, xs)
+    val seenFrom = Array.fill(n)(-1) // seenFrom(v) == u: v already paired with u
+    val todo = scala.collection.mutable.ArrayBuffer[Int]()
+    def push(u: Int): Unit = {
+      var e = first(u)
+      while (e >= 0) { todo += ys(e); e = next(e) }
+    }
+    val out = scala.collection.mutable.ArrayBuffer[Row]()
+    var u = 0
+    while (u < n) {
+      push(u)
+      while (todo.nonEmpty) {
+        val v = todo.remove(todo.length - 1)
+        if (seenFrom(v) != u) {
+          seenFrom(v) = u
+          out += Row(keys.key(u), keys.key(v))
+          if (out.length > LocalClosureMaxPairs) return None
+          push(v)
         }
-        frontier = next
       }
+      u += 1
     }
-    if (out.size > LocalClosureMaxPairs) None
-    else Some(out.toSeq.toDF("s", "o"))
+    Some(LocalGraph.frame(base.sparkSession, out.toSeq,
+      StructType(Seq(StructField("s", dt), StructField("o", dt)))))
   }
 
+  /** transitive closure fixpoint. Doubling phase: after k rounds `acc` holds
+    * every path of length ≤ 2^k — ⌈log₂ d⌉ rounds for diameter d, ideal for
+    * small/medium pair sets where per-job overhead dominates. Past
+    * [[DoublingMaxPairs]] the acc⋈acc intermediate (Σ indeg·outdeg over
+    * midpoints) can dwarf the closure itself, so large sets extend one hop
+    * per round (frontier⋈base, shuffling only novel pairs). */
   def closure(base0: DataFrame,
       doublingMaxPairs: Long = DoublingMaxPairs,
       localMaxEdges: Long = LocalClosureMaxEdges): DataFrame = {
     var (acc, accRdd) = barrier(base0.dropDuplicates())
     val base = acc
     val baseRdd = accRdd
-    var count = acc.count()
-    if (count <= localMaxEdges) {
-      val edges = base.select(col("s"), col("o")).collect()
-        .map(r => (r.getString(0), r.getString(1)))
-      localClosure(base.sparkSession, edges) match {
-        case Some(local) =>
-          baseRdd.unpersist(blocking = false)
-          return local
-        case None => // output outgrew the driver bound; run distributed
-      }
+    val rows = LocalGraph.collect(base.select(col("s"), col("o")), localMaxEdges)
+    rows.flatMap(localClosure(base, _)) match {
+      case Some(local) =>
+        baseRdd.unpersist(blocking = false)
+        return local
+      case None => // too big for the driver; run distributed
     }
+    // a declined local path already counted the barriered base
+    var count = rows.fold(acc.count())(_.length.toLong)
     var frontier = acc
     var frontierRdd: org.apache.spark.rdd.RDD[_] = null
     var rounds = 0

@@ -1609,4 +1609,15 @@ class CatalogSpec extends SparkSpec {
     // remaining free bands 0 and 3 are singleton runs -> no pool
     assert(got(3L) == (None, None), got(3L).toString)
   }
+
+  test("versions store is unique on (bucket, key, version_ulid)") {
+    // cat15/goa1 build their request families in one pass and drop
+    // duplicates globally; that equals the per-family distincts only
+    // while every store key is unique
+    val v = ObjectTables.versionsStore(spark, sf0001)
+    val dups = v.groupBy("bucket", "key", "version_ulid").count()
+      .filter(col("count") > 1)
+    assert(v.count() > 0)
+    assert(dups.count() === 0, dups.limit(5).collect().mkString(", "))
+  }
 }

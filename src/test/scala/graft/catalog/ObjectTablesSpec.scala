@@ -33,4 +33,17 @@ class ObjectTablesSpec extends SparkSpec {
       md5((col("l_partkey") % 100).cast("string")).as("direct"))
     assert(check.filter(col("lookup") =!= col("direct")).count() === 0)
   }
+
+  test("md5Mod100 raises on residues outside 0..99, passes null through") {
+    def lookup(r: Long) = spark.range(r, r + 1)
+      .select(ObjectTables.md5Mod100(col("id"))).collect()
+    Seq(-5L, -1L, 100L, 123L).foreach { r =>
+      val e = intercept[Exception](lookup(r))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains(s"residue out of 0..99: $r")), s"residue $r: $e")
+    }
+    assert(spark.range(1).select(ObjectTables.md5Mod100(lit(null).cast("long")))
+      .head().isNullAt(0))
+  }
 }
